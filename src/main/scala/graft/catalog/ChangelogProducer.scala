@@ -67,22 +67,19 @@ object ChangelogProducer {
 
   /** Version `ver`'s feed is provably EMPTY from manifest metadata
     * alone — no Spark job needed to derive it: an audit/no-op commit
-    * (zero added+removed data/delete/eq-delete files over a recorded
-    * parent — the [[ManifestSnapshotReads.noopCommit]] condition), or
-    * an empty snapshot whose parent state is empty too (the CREATE
-    * version: a diff of two empty states). Production then publishes
+    * ([[Snapshots.Snapshot.isNoopOverParent]]) whose parent is still
+    * retained — the [[graft.streaming.ChangeFeed.versionFeed]] noop
+    * guard; over an expired parent the computed path decides, and it
+    * fails loudly on a retention hole — or an empty snapshot whose
+    * parent state is empty too (the CREATE version: a diff of two
+    * empty states). Production then publishes
     * a MARKER-ONLY version dir; [[serve]] reads zero files under the
     * explicit feed schema — the same empty feed the computed path
     * derives, at zero planning/job cost per covered commit. */
   private def provablyEmptyFeed(tableDir: Path, ver: Long): Boolean =
     Snapshots.read(tableDir, ver).exists { s =>
-      def noop = s.parent.isDefined &&
-        s.summary.get("added-data-files").contains(0L) &&
-        s.summary.get("removed-data-files").contains(0L) &&
-        s.summary.getOrElse("added-delete-files", 0L) == 0L &&
-        s.summary.getOrElse("removed-delete-files", 0L) == 0L &&
-        s.summary.getOrElse("added-eqdelete-files", 0L) == 0L &&
-        s.summary.getOrElse("removed-eqdelete-files", 0L) == 0L
+      def noop = s.isNoopOverParent &&
+        s.parent.exists(Snapshots.versions(tableDir).contains)
       def emptyNow = Snapshots.dataFiles(s.files).isEmpty
       def parentEmpty = s.parent match {
         case None => true // earliest retained: initial load of ∅

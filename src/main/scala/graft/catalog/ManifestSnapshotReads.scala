@@ -62,17 +62,7 @@ final class ManifestSnapshotReads(spark: SparkSession, tableDir: Path,
     * (A branch's b-0 fork has parent None, so it still emits as the
     * initial load.) */
   override def noopCommit(version: Long): Boolean =
-    metaOf(version).exists(s =>
-      s.summary.get("added-data-files").contains(0L) &&
-        s.summary.get("removed-data-files").contains(0L) &&
-        // a merge-on-read delete commit adds ONLY delete files — it
-        // is content-changing (its rows retract in the feed); same
-        // for a PK table's equality-delete commits
-        s.summary.getOrElse("added-delete-files", 0L) == 0L &&
-        s.summary.getOrElse("removed-delete-files", 0L) == 0L &&
-        s.summary.getOrElse("added-eqdelete-files", 0L) == 0L &&
-        s.summary.getOrElse("removed-eqdelete-files", 0L) == 0L &&
-        s.parent.isDefined)
+    metaOf(version).exists(_.isNoopOverParent)
 
   /** Zero DATA files in the snapshot — provably empty content from
     * the manifest alone (delete/eq-delete files cannot create rows). */

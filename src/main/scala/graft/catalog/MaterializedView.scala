@@ -2,16 +2,17 @@ package graft.catalog
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, sum, when}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, max_by, min, min_by, sum, when}
 
 /** INCREMENTAL MATERIALIZED-VIEW maintenance over the lake — the
   * batch twin of the streaming MV pipeline (the reference's entire
   * analytics job is a continuously-maintained aggregate,
   * `flink-cdc/sql/revenue-analytics.sql:46-65`; Delta/Snowflake users
   * know this as incremental refresh): a grouped sum/count aggregate
-  * over a VERSIONED lake table, materialized as its own versioned
-  * lake table and refreshed by folding the source's CHANGE FEED over
+  * over a VERSIONED lake table (or an inner equi-join of two,
+  * [[createJoin]]), materialized as its own versioned lake table and
+  * refreshed by folding the source's CHANGE FEED over
   * `(lastApplied, latest]` instead of recomputing the world.
   *
   * The refresh composes three surfaces this engine already ships:
@@ -20,9 +21,13 @@ import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, sum,
   *      (`op, version, before, after` rows whose application to
   *      snapshot `from` reconstructs snapshot `to`);
   *   2. the signed delta fold (after rows +1, before rows −1, the
-  *      [[graft.cdc.Upsert.applyChangelogAggregateRetract]] algebra —
-  *      sum/count are the invertible aggregates, which is exactly why
-  *      the surface is restricted to them; avg = sum/count downstream);
+  *      [[graft.cdc.Upsert.applyChangelogAggregateRetract]] algebra):
+  *      sum/count fold invertibly (avg = sum/count downstream);
+  *      min/max fold the inserted rows' extremum monotonically and
+  *      carry the retracted rows' extremum, and only a group whose
+  *      retraction reaches its current extremum (or that the MV does
+  *      not hold yet) recomputes it from the source — the rule and
+  *      its exactness argument are at [[applyDelta]];
   *   3. SQL `MERGE INTO` on the MV table — O(changed groups) writes,
   *      groups whose row count reaches zero DELETE (and under
   *      `graft.write.mode='merge-on-read'` the refresh commit is a
@@ -73,10 +78,10 @@ object MaterializedView {
     * when a refresh drives it to zero the group's MV row deletes. */
   val RowsCol = "mv_rows"
 
-  /** Cap on the retracted-group key set pushed into the extremal
+  /** Cap on the flagged-group key set pushed into the extremal
     * recompute's source scan as IN predicates (driver-collected; past
     * it the recompute stays semi-join-restricted only). */
-  private val MaxRetractInList = 256
+  private val MaxRecomputeInList = 256
 
   final case class MvDef(
       source: String,
@@ -162,14 +167,36 @@ object MaterializedView {
       case (c, fn) => throw new IllegalArgumentException(
         s"incremental MV supports sum|count|min|max aggregates only " +
           s"(got $c:$fn — sum/count fold invertibly, min/max keep a " +
-          "monotonic fast path with recompute-on-retract; derive avg " +
-          "from sum/count downstream)")
+          "monotonic fast path and recompute a group only when its " +
+          "extremum is retracted; derive avg from sum/count downstream)")
     } :+ count(lit(1)).cast("bigint").as(RowsCol)
     src.groupBy(groupBy.map(col): _*).agg(cols.head, cols.tail: _*)
   }
 
+  /** Run `body` over `df` registered as a session temp view under a
+    * name unique to this call, dropped afterwards: MVs built or
+    * refreshed at once in one session never read each other's rows,
+    * and a caller's own temp views are never replaced. */
+  private def withTempView[A](df: DataFrame, prefix: String)(
+      body: String => A): A = {
+    val name = prefix + "_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+    df.createTempView(name)
+    try body(name) finally df.sparkSession.catalog.dropTempView(name)
+  }
+
+  /** CTAS `mvRef` from `full`, laid out as `bucket(buckets, key)`. */
+  private def ctas(spark: SparkSession, mvRef: String, key: String,
+                   buckets: Int, full: DataFrame): Unit =
+    withTempView(full, "__mv_full") { v =>
+      spark.sql(s"CREATE TABLE $mvRef " +
+        s"PARTITIONED BY (bucket($buckets, `$key`)) " +
+        s"TBLPROPERTIES ('versioned'='true') AS SELECT * FROM $v")
+      ()
+    }
+
   /** Create `mvRef` as a versioned lake table materializing
-    * `GROUP BY groupBy` sum/count aggregates over the versioned
+    * `GROUP BY groupBy` sum/count/min/max aggregates over the versioned
     * source, at the source's CURRENT version; `keys` is the source's
     * row identity (the change feed's diff key). The MV lays out as
     * `bucket(buckets, groupBy.head)` — cardinality-independent
@@ -185,17 +212,14 @@ object MaterializedView {
     val srcV = Snapshots.latest(srcDir).map(_.version).getOrElse(
       throw new IllegalArgumentException(
         s"$sourceRef is not a manifest-versioned table"))
-    fullAggregate(
+    val full = fullAggregate(
       spark.sql(s"SELECT * FROM $sourceRef VERSION AS OF $srcV"),
-      groupBy, aggs).createOrReplaceTempView("__mv_full")
+      groupBy, aggs)
     val mvDir = resolveDir(spark, mvRef)
     // the CTAS data commit carries the initial watermark stamp — the
     // manifest is the single source from the first snapshot on
     Snapshots.withSummaryStamp(mvDir, Map(SourceVersionKey -> srcV)) {
-      spark.sql(s"CREATE TABLE $mvRef " +
-        s"PARTITIONED BY (bucket($buckets, `${groupBy.head}`)) " +
-        "TBLPROPERTIES ('versioned'='true') " +
-        "AS SELECT * FROM __mv_full")
+      ctas(spark, mvRef, groupBy.head, buckets, full)
     }
     writeDef(mvDir, MvDef(sourceRef, keys, groupBy, aggs, srcV,
       Snapshots.latest(mvDir).map(_.version).getOrElse(0L), None))
@@ -264,18 +288,15 @@ object MaterializedView {
           s"(${joinCols.mkString(",")}) — the join key must be the " +
           "dimension's row identity")
     }
-    fullAggregate(
+    val full = fullAggregate(
       spark.sql(s"SELECT * FROM $factRef VERSION AS OF $fv")
         .join(spark.sql(s"SELECT * FROM $dimRef VERSION AS OF $dv"),
           joinCols, "inner"),
-      groupBy, aggs).createOrReplaceTempView("__mv_full")
+      groupBy, aggs)
     val mvDir = resolveDir(spark, mvRef)
     Snapshots.withSummaryStamp(mvDir,
       Map(SourceVersionKey -> fv, DimVersionKey -> dv)) {
-      spark.sql(s"CREATE TABLE $mvRef " +
-        s"PARTITIONED BY (bucket($buckets, `${groupBy.head}`)) " +
-        "TBLPROPERTIES ('versioned'='true') " +
-        "AS SELECT * FROM __mv_full")
+      ctas(spark, mvRef, groupBy.head, buckets, full)
     }
     writeDef(mvDir, MvDef(factRef, factKeys, groupBy, aggs, fv,
       Snapshots.latest(mvDir).map(_.version).getOrElse(0L), None,
@@ -460,7 +481,20 @@ object MaterializedView {
       if (toF <= fromF) None
       else Some(Catalog.readTableChanges(spark, d.source, d.keys,
         fromF, toF).localCheckpoint(true))
-    val factLegs = changes.toSeq.map { ch =>
+    val factLegs = changes.toSeq.map { ch0 =>
+      // the feed is per VERSION: a fact row changed twice in the range
+      // shows its intermediate images too. Against ONE dim state they
+      // telescope; when the dim changed as well, an intermediate
+      // before-image ⋈ dim@fromD and after-image ⋈ dim@toD would count
+      // a row that exists at neither end — so each key contributes
+      // only its endpoint images (first before, last after)
+      val ch =
+        if (fromD == toD) ch0
+        else ch0.groupBy(d.keys.map(k =>
+            coalesce(col(s"after.$k"), col(s"before.$k"))): _*)
+          .agg(min_by(col("before"), col("version")).as("before"),
+            max_by(col("after"), col("version")).as("after"))
+          .withColumn("op", lit(graft.cdc.ChangeEvent.OpUpdate))
       val fu = ch.filter(col("op") =!= graft.cdc.ChangeEvent.OpDelete &&
           col("after").isNotNull).select(col("after.*"))
         .withColumn("__w", lit(1L))
@@ -512,7 +546,26 @@ object MaterializedView {
   /** Fold a signed source-row delta into the MV with ONE `MERGE INTO`
     * over the changed groups, the watermark stamp(s) riding the merge
     * commit; `srcAtTo` supplies the post-range source image for the
-    * extremal recompute-on-retract. */
+    * extremal recompute, planned only when some group needs it.
+    *
+    * The extremal recompute rule. Per group the fold carries, for each
+    * min (max) aggregate, the inserted rows' minimum `s` and the
+    * RETRACTED rows' minimum `r` (maximum for a max). Left-joined
+    * against the MV's current row `m` — exact at the observed stamp,
+    * since the refresh commit check admits nothing but
+    * content-preserving maintenance above it — a retracted group is
+    * RECOMPUTED from the source at `to` only when it survives the
+    * refresh (`mv_rows + __d_rows > 0`, `mv_rows` 0 when absent) and
+    *  - it is absent from the MV, or
+    *  - some retracted value reaches its current extremum (`r <= m`
+    *    for a min, `r >= m` for a max), or `m` is NULL.
+    * A group that does not survive is deleted (or, absent, never
+    * inserted). Every other group takes `least`/`greatest(m, s)`: no
+    * row holding `m` was retracted, so `m` is still in the group at
+    * `to`, and every row there is either an untouched old row (no
+    * better than `m`) or an inserted one (no better than `s`). A
+    * retracted row rarely holds its group's extremum, so most
+    * refreshes plan no source read at all. */
   private def applyDelta(spark: SparkSession, mvRef: String, mvDir: Path,
                          d: MvDef, signed: DataFrame,
                          srcAtTo: () => DataFrame,
@@ -521,19 +574,20 @@ object MaterializedView {
                          advance: MvDef => MvDef): Unit = {
     val invertible = d.aggs.filter(a => a._2 == "sum" || a._2 == "count")
     val extremal = d.aggs.filter(a => a._2 == "min" || a._2 == "max")
-    // min/max deltas: the INSERT side's extrema (the monotonic fast
-    // path — least/greatest against the MV value), plus a per-group
-    // retraction flag: a retracted row can ONLY move an extremum by
-    // recomputation (the fold is not invertible for min/max)
+    def extremum(fn: String, c: Column): Column =
+      if (fn == "min") min(c) else max(c)
+    // min/max deltas: the INSERT side's extremum (the monotonic fast
+    // path — least/greatest against the MV value) and the RETRACT
+    // side's extremum (`__r_*`, the recompute test's probe)
     val deltaCols = d.aggs.map {
       case (c, "sum") => sum(col(c) * col("__w")).as(aggName(c, "sum"))
       case (c, "count") => sum(when(col(c).isNotNull, col("__w"))
         .otherwise(0L)).as(aggName(c, "count"))
-      case (c, "min") => min(when(col("__w") > 0L, col(c)))
-        .as(aggName(c, "min"))
-      case (c, "max") => max(when(col("__w") > 0L, col(c)))
-        .as(aggName(c, "max"))
+      case (c, fn @ ("min" | "max")) =>
+        extremum(fn, when(col("__w") > 0L, col(c))).as(aggName(c, fn))
       case (c, fn) => throw new IllegalStateException(s"$c:$fn")
+    } ++ extremal.map { case (c, fn) =>
+      extremum(fn, when(col("__w") < 0L, col(c))).as(s"__r_${aggName(c, fn)}")
     } ++ Seq(
       sum(col("__w")).cast("bigint").as("__d_rows"),
       max(when(col("__w") < 0L, 1L).otherwise(0L)).cast("bigint")
@@ -554,50 +608,67 @@ object MaterializedView {
          else Seq(col("__retract") === 1L) ++
            extremal.map { case (c, fn) => col(aggName(c, fn)).isNotNull }))
         .reduce(_ || _))
-    // materialize the signed fold ONCE: the retraction probe, the
-    // recompute join's build side, the empty-delta check and the merge
-    // all read the SAME computed delta (and a NET-ZERO churn range —
-    // insert+delete of the same keys — must not trigger a group
-    // rewrite: the merge with an empty source still plans a
-    // replace-data commit). With extremal aggregates the recompute
-    // branch used to reference deltas0 TWICE (its own left side and
-    // the semi-join's build side) — unmaterialized, the whole signed
-    // DAG executed twice per refresh (the r17 unshared-subtree trap).
-    val matDeltas0 = deltas0.localCheckpoint(true)
-    // recompute-on-retract: for retracted groups ONLY, the extrema
-    // re-derive from the source at `to` — O(retracted groups' rows),
-    // null-safe-joined so NULL group keys recompute too
+    // extremal MVs: the per-group recompute flag, from the MV's current
+    // rows (the rule in the doc comment above)
+    val deltas =
+      if (extremal.isEmpty) deltas0
+      else {
+        val cur = spark.table(mvRef).select(
+          d.groupBy.map(g => col(g).as(s"__rk_$g")) ++
+            (RowsCol +: extremal.map { case (c, fn) => aggName(c, fn) })
+              .map(n => col(n).as(s"__t_$n")): _*)
+        val reached = extremal.map { case (c, fn) =>
+          val n = aggName(c, fn)
+          val (r, m) = (col(s"__r_$n"), col(s"__t_$n"))
+          m.isNull || (if (fn == "min") r <= m else r >= m)
+        }.reduce(_ || _)
+        val absent = col(s"__t_$RowsCol").isNull
+        val survives =
+          coalesce(col(s"__t_$RowsCol"), lit(0L)) + col("__d_rows") > 0L
+        val recompute = col("__retract") === 1L && survives &&
+          (absent || reached)
+        deltas0.join(cur,
+            d.groupBy.map(g => deltas0(g) <=> col(s"__rk_$g")).reduce(_ && _),
+            "left")
+          .withColumn("__recompute", when(recompute, 1L).otherwise(0L))
+          .drop(cur.columns.toSeq ++ Seq("__retract") ++
+            extremal.map { case (c, fn) => s"__r_${aggName(c, fn)}" }: _*)
+      }
+    // materialize the signed fold ONCE: the flag probe, the recompute
+    // join's build side, the empty-delta check and the merge all read
+    // the SAME computed delta (and a NET-ZERO churn range — insert+
+    // delete of the same keys — must not trigger a group rewrite: the
+    // merge with an empty source still plans a replace-data commit)
+    val matDeltas0 = deltas.localCheckpoint(true)
+    // the flagged groups ONLY re-derive their extrema from the source
+    // at `to` — null-safe-joined so NULL group keys recompute too
     val matDeltas =
       if (extremal.isEmpty) matDeltas0
       else {
-        // the retracted group keys, from the MATERIALIZED delta — a
-        // pure-insert refresh skips the recompute (and the source
-        // time-travel read's planning) entirely
-        val retractedKeys = matDeltas0.filter(col("__retract") === 1L)
-          .select(d.groupBy.map(col): _*).distinct()
-          .limit(MaxRetractInList + 1).collect()
-        if (retractedKeys.isEmpty) {
-          // the merge SQL still references the __rc columns — typed
-          // NULLs (nothing retracted, the fast path never reads them)
+        val flagged = matDeltas0.filter(col("__recompute") === 1L)
+          .select(d.groupBy.map(g => col(g).as(s"__rk_$g")): _*)
+        val flaggedKeys = flagged.limit(MaxRecomputeInList + 1).collect()
+        if (flaggedKeys.isEmpty) {
+          // no flagged group: no source read is planned; the merge SQL
+          // still references the __rc columns — typed NULLs it never
+          // reads
           extremal.foldLeft(matDeltas0) { case (df, (c, fn)) =>
             val n = aggName(c, fn)
             df.withColumn(s"__rc_$n", lit(null).cast(df.schema(n).dataType))
           }
         } else {
           val src0 = srcAtTo()
-          // IN-pushdown prune (guide §6 / r17 VERDICT #2): when the
-          // retracted group set is driver-small, a per-column IN
-          // predicate — a SUPERSET of the retracted groups, NULL keys
-          // included — pushes into the source scan (parquet row-group
-          // stats, partition pruning, manifest file skipping), so the
-          // recompute reads O(affected files), not O(table). The
-          // semi-join below keeps exactness; past the cap the scan
-          // stays semi-join-restricted only (shuffle O(retracted)).
+          // IN-pushdown prune: when the flagged group set is
+          // driver-small, a per-column IN predicate — a SUPERSET of the
+          // flagged groups, NULL keys included — pushes into the source
+          // scan (parquet row-group stats, partition pruning, manifest
+          // file skipping). The semi-join below keeps exactness; past
+          // the cap the scan is restricted by the semi-join alone.
           val src =
-            if (retractedKeys.length > MaxRetractInList) src0
+            if (flaggedKeys.length > MaxRecomputeInList) src0
             else {
               val preds = d.groupBy.zipWithIndex.map { case (g, i) =>
-                val vs = retractedKeys.map(_.get(i)).distinct.toSeq
+                val vs = flaggedKeys.map(_.get(i)).distinct.toSeq
                 val nonNull = vs.filterNot(_ == null)
                 val in =
                   if (nonNull.isEmpty) lit(false)
@@ -606,14 +677,10 @@ object MaterializedView {
               }
               src0.where(preds.reduce(_ && _))
             }
-          val retracted = matDeltas0.filter(col("__retract") === 1L)
-            .select(d.groupBy.map(g => col(g).as(s"__rk_$g")): _*)
-          val rcCols = extremal.map {
-            case (c, "min") => min(col(c)).as("__rc_" + aggName(c, "min"))
-            case (c, "max") => max(col(c)).as("__rc_" + aggName(c, "max"))
-            case (c, fn) => throw new IllegalStateException(s"$c:$fn")
+          val rcCols = extremal.map { case (c, fn) =>
+            extremum(fn, col(c)).as("__rc_" + aggName(c, fn))
           }
-          val rc = src.join(retracted,
+          val rc = src.join(flagged,
               d.groupBy.map(g => src(g) <=> col(s"__rk_$g")).reduce(_ && _),
               "left_semi")
             .groupBy(d.groupBy.map(col): _*)
@@ -639,7 +706,6 @@ object MaterializedView {
         pendingTo = None))
       return
     }
-    matDeltas.createOrReplaceTempView("__mv_deltas")
     val names = d.aggs.map { case (c, fn) => aggName(c, fn) }
     val on = d.groupBy.map(g => s"t.`$g` <=> s.`$g`").mkString(" AND ")
     val sets = (d.aggs.map {
@@ -649,9 +715,9 @@ object MaterializedView {
       case (c, fn) =>
         val n = aggName(c, fn)
         val fast = if (fn == "min") "least" else "greatest"
-        // retraction → the recomputed value (authoritative); pure
-        // inserts → the monotonic fast path (least/greatest skip NULLs)
-        s"`$n` = CASE WHEN s.`__retract` = 1 THEN s.`__rc_$n` " +
+        // flagged → the recomputed value (authoritative); otherwise
+        // the monotonic fast path (least/greatest skip NULLs)
+        s"`$n` = CASE WHEN s.`__recompute` = 1 THEN s.`__rc_$n` " +
           s"ELSE $fast(t.`$n`, s.`$n`) END"
     } :+ s"`$RowsCol` = t.`$RowsCol` + s.`__d_rows`").mkString(", ")
     val insCols = (d.groupBy ++ names :+ RowsCol).map(c => s"`$c`")
@@ -662,20 +728,24 @@ object MaterializedView {
           s"coalesce(s.`${aggName(c, fn)}`, 0)"
         case (c, fn) =>
           val n = aggName(c, fn)
-          s"CASE WHEN s.`__retract` = 1 THEN s.`__rc_$n` ELSE s.`$n` END"
+          s"CASE WHEN s.`__recompute` = 1 THEN s.`__rc_$n` ELSE s.`$n` END"
       } :+ "s.`__d_rows`")
       .mkString(", ")
     // the merge commit CARRIES the new watermark — fold and watermark
     // are one atomic commit, no torn window exists; the commit check
-    // closes the remaining race (foreign commit after currentState)
+    // closes the remaining race (foreign commit after currentState).
+    // A group absent from the MV whose rows net to zero (inserted and
+    // deleted inside the range) is never inserted.
     Snapshots.withCommitCheck(mvDir)(foreignGuard) {
       Snapshots.withSummaryStamp(mvDir, stamps) {
-        spark.sql(
-          s"""MERGE INTO $mvRef t USING __mv_deltas s ON $on
-             |WHEN MATCHED AND t.`$RowsCol` + s.`__d_rows` <= 0 THEN DELETE
-             |WHEN MATCHED THEN UPDATE SET $sets
-             |WHEN NOT MATCHED THEN INSERT ($insCols) VALUES ($insVals)"""
-            .stripMargin)
+        withTempView(matDeltas, "__mv_deltas") { deltasView =>
+          spark.sql(
+            s"""MERGE INTO $mvRef t USING $deltasView s ON $on
+               |WHEN MATCHED AND t.`$RowsCol` + s.`__d_rows` <= 0 THEN DELETE
+               |WHEN MATCHED THEN UPDATE SET $sets
+               |WHEN NOT MATCHED AND s.`__d_rows` > 0
+               |  THEN INSERT ($insCols) VALUES ($insVals)""".stripMargin)
+        }
         // an all-zero delta merges nothing and commits nothing: bump the
         // watermark with a metadata-only commit so the next refresh
         // never rescans the folded range

@@ -136,7 +136,22 @@ private[catalog] object Snapshots {
                             dropped: Seq[Long] = Seq.empty,
                             pins: Map[String, Long] = Map.empty,
                             lastSeq: Long = 0L,
-                            seqs: Map[String, Long] = Map.empty)
+                            seqs: Map[String, Long] = Map.empty) {
+
+    /** Provably content-identical to the recorded parent from the
+      * summary alone: an audit commit (expire, tag, branch fork) that
+      * added and removed no data, delete or equality-delete file. A
+      * merge-on-read or PK delete adds ONLY delete files, so it is
+      * content-changing. Whether the parent is still retained is the
+      * caller's check. */
+    def isNoopOverParent: Boolean =
+      parent.isDefined &&
+        summary.get("added-data-files").contains(0L) &&
+        summary.get("removed-data-files").contains(0L) &&
+        Seq("added-delete-files", "removed-delete-files",
+          "added-eqdelete-files", "removed-eqdelete-files")
+          .forall(k => summary.getOrElse(k, 0L) == 0L)
+  }
 
   private def dir(tableDir: Path): Path = tableDir.resolve(DirName)
 

@@ -204,6 +204,34 @@ class ChangelogProducerSpec extends SparkSpec {
     }
   }
 
+  test("a noop version produced lazily after its parent expired into a retention hole fails loudly, never serves an empty feed") {
+    withLake("h") { (cat, lake) =>
+      mkTable(cat, "prod", producer = true)
+      (1 to 2).foreach(i =>
+        Seq((i.toLong, s"v$i", i.toLong)).toDF("k", "v", "x")
+          .write.mode("append").insertInto(s"$cat.m.prod"))      // v1-2
+      spark.sql(s"CALL $cat.system.tag('m.prod', 'first', 1)")    // v3
+      spark.sql(s"CALL $cat.system.tag('m.prod', 'audit', 3)")    // v4
+      spark.sql(s"DELETE FROM $cat.m.prod WHERE k = 1")          // v5 blind
+      val dir = lake.resolve("m/prod.parquet")
+      assert(Snapshots.readMeta(dir, 3L).exists(s =>
+        s.isNoopOverParent && s.parent.contains(2L)))
+      assert(!Files.isDirectory(ChangelogProducer.dirFor(dir, 3L)),
+        "tag commits and blind deletes are off the hooked write paths")
+      // keep the newest data snapshot and the pinned v1 and v3: v3's
+      // parent v2 is dropped while an OLDER snapshot stays retained —
+      // a hole the feed cannot re-derive across
+      spark.sql(s"CALL $cat.system.expire_snapshots('m.prod', 1)")
+      val vs = Snapshots.versions(dir)
+      assert(Seq(1L, 3L, 5L).forall(vs.contains) && !vs.contains(2L),
+        s"retained: $vs")
+      val e = intercept[IllegalStateException](feed(cat, "prod", 1L, 3L))
+      assert(e.getMessage.contains("expire_snapshots"), e.getMessage)
+      assert(!Files.isDirectory(ChangelogProducer.dirFor(dir, 3L)),
+        "no marker-only dir may be published across the hole")
+    }
+  }
+
   test("expire GCs dropped versions' changelog dirs; declaration is validated") {
     withLake("d") { (cat, lake) =>
       mkTable(cat, "prod", producer = true)

@@ -15,6 +15,8 @@ import java.nio.file.{Files, Path}
   *  - a fact row whose join key moves re-homes to the new dim row;
   *  - BOTH watermarks stamp the SAME commit — no torn half-advanced
   *    pair exists, and net-zero churn bumps them metadata-only;
+  *  - a fact row changed more than once inside a range whose dim row
+  *    also changed contributes only its endpoint images;
   *  - extremal (min/max) aggregates recompute on dim-side retraction;
   *  - racing refreshes SERIALIZE: one folds, the other conflicts —
   *    a shared range never folds twice;
@@ -207,6 +209,23 @@ class JoinMaterializedViewSpec extends SparkSpec {
       spark.sql(s"DELETE FROM $cat.m.fact WHERE k = 2")
       MaterializedView.refresh(spark, s"$cat.m.jv")
       assert(got() == rc())
+    }
+  }
+
+  test("a fact row inserted and deleted inside one range while its dim row is relabeled contributes nothing") {
+    withLake("g") { (cat, _) =>
+      mkSources(cat)
+      mkMv(cat)
+      // one refresh range: k=17 joins m2 (silver), m2 turns bronze,
+      // k=17 is deleted — it exists at neither end of the range, so
+      // neither silver nor bronze may keep any of it
+      Seq((17L, "m2", 27L), (18L, "m1", 12L)).toDF("k", "jk", "x")
+        .write.mode("append").insertInto(s"$cat.m.fact")
+      spark.sql(s"UPDATE $cat.m.dim SET label = 'bronze' WHERE jk = 'm2'")
+      spark.sql(s"DELETE FROM $cat.m.fact WHERE k = 17")
+      MaterializedView.refresh(spark, s"$cat.m.jv")
+      assert(mv(cat) == recompute(cat))
+      assert(mv(cat).find(_._1 == "m2").map(_._2).contains("bronze"))
     }
   }
 

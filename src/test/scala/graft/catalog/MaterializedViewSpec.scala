@@ -12,6 +12,11 @@ import java.nio.file.{Files, Path}
   *    reaches zero (their MV rows DELETE);
   *  - a fresh MV refreshes to a no-op (no MV commit);
   *  - the MERGE writes only CHANGED groups;
+  *  - min/max recompute from the source only for a group whose
+  *    extremum was retracted — a refresh whose retractions miss every
+  *    extremum reads no source snapshot;
+  *  - staging temp views are private to each call: concurrent MVs in
+  *    one session never mix rows, and a caller's views survive;
   *  - two-phase torn-refresh recovery: merge-landed → finalize
   *    without re-applying (no double counting); merge-lost → redo. */
 class MaterializedViewSpec extends SparkSpec {
@@ -342,6 +347,160 @@ class MaterializedViewSpec extends SparkSpec {
       assert(mvNow() == recomputeNow(), "IN-pruned recompute (incl. NULL group)")
       assert(mvNow().find(_._1.isEmpty).get._2 == 599L,
         "NULL group's min recomputed (k=299 retracted)")
+    }
+  }
+
+  /** How many query executions `body` runs whose analyzed plan reads
+    * the catalog table `table` (as `db.name`). Listener events arrive
+    * asynchronously on the listener bus, in order: only the events
+    * between a marked probe query run before `body` and one run after
+    * it are counted. */
+  private def tableReads(table: String)(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val (start, end) = (s"start_$tag", s"end_$tag")
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var counting = false
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def seen(qe: QueryExecution): Unit = {
+        val out = qe.analyzed.output.map(_.name)
+        if (out.contains(start)) { counting = true; started.countDown() }
+        else if (out.contains(end)) { counting = false; ended.countDown() }
+        else if (counting && qe.analyzed.exists {
+          case r: DataSourceV2Relation => r.table.name() == table
+          case _ => false
+        }) { reads.incrementAndGet(); () }
+      }
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = seen(qe)
+    }
+    def probe(name: String, latch: java.util.concurrent.CountDownLatch) = {
+      spark.range(1).toDF(name).collect()
+      assert(latch.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    }
+    spark.listenerManager.register(listener)
+    try {
+      probe(start, started)
+      body
+      probe(end, ended)
+    } finally spark.listenerManager.unregister(listener)
+    reads.get()
+  }
+
+  test("a refresh whose retractions miss every extremum reads no source snapshot; retracting an extremum recomputes only then") {
+    withLake("nr") { (cat, _) =>
+      // changelog-producer source: the feed is served from the
+      // persisted changelog files, so any read of the table itself is
+      // the extremal recompute's time-travel read
+      spark.sql(
+        s"""CREATE TABLE $cat.m.nrsrc (k BIGINT NOT NULL, grp STRING, x BIGINT)
+           |PARTITIONED BY (bucket(4, k))
+           |TBLPROPERTIES ('versioned'='true', 'primary-key'='k',
+           |  '${PkTables.ChangelogProducerProp}'='input')""".stripMargin)
+      // g0 = {30, 60, 90, 120}, g1 = {10, 40, 70, 100}, g2 = {20, 50, 80, 110}
+      (1L to 12L).map(k => (k, s"g${k % 3}", k * 10L)).toDF("k", "grp", "x")
+        .write.mode("append").insertInto(s"$cat.m.nrsrc")
+      MaterializedView.create(spark, s"$cat.m.agg", s"$cat.m.nrsrc",
+        Seq("k"), Seq("grp"), Seq("x" -> "sum", "x" -> "min", "x" -> "max"))
+      def mvNow() = spark.table(s"$cat.m.agg")
+        .select("grp", "sum_x", "min_x", "max_x", "mv_rows")
+        .as[(String, Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+      def recomputeNow() = spark.sql(
+        s"SELECT grp, sum(x), min(x), max(x), count(*) FROM $cat.m.nrsrc GROUP BY grp")
+        .as[(String, Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+      // interior retractions in every group: a delete per group and an
+      // update that moves an interior value
+      spark.sql(s"DELETE FROM $cat.m.nrsrc WHERE k IN (5, 6, 7)")
+      spark.sql(s"UPDATE $cat.m.nrsrc SET x = 65 WHERE k = 4")
+      assert(tableReads("m.nrsrc")(
+        MaterializedView.refresh(spark, s"$cat.m.agg")) == 0,
+        "no group lost its extremum: the source is never read")
+      assert(mvNow() == recomputeNow())
+      // retract g1's minimum (k=1, x=10): that group recomputes
+      spark.sql(s"DELETE FROM $cat.m.nrsrc WHERE k = 1")
+      assert(tableReads("m.nrsrc")(
+        MaterializedView.refresh(spark, s"$cat.m.agg")) > 0,
+        "a retracted extremum recomputes from the source")
+      assert(mvNow() == recomputeNow())
+      assert(mvNow().find(_._1 == "g1").get._3 == 65L)
+    }
+  }
+
+  test("two MVs built and refreshed at once from two threads of one session never see each other's staged rows") {
+    withLake("cc") { (cat, _) =>
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutor(pool)
+      def both[A](f: String => A): Seq[A] = {
+        val fs = Seq("a", "b").map(t => scala.concurrent.Future(f(t)))
+        fs.map(scala.concurrent.Await.result(_,
+          scala.concurrent.duration.Duration(300, "s")))
+      }
+      // same schema, disjoint values: a row staged for the other MV
+      // shows in every aggregate
+      def rows(t: String, ks: Seq[Long]) = ks.map(k =>
+        (k, s"g${k % 4}", if (t == "a") k else 1000L + 3L * k))
+        .toDF("k", "grp", "x")
+      def mvNow(t: String) = spark.table(s"$cat.m.mv$t")
+        .select("grp", "sum_x", "min_x", "max_x", "mv_rows")
+        .as[(String, Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+      def recomputeNow(t: String) = spark.sql(
+        s"SELECT grp, sum(x), min(x), max(x), count(*) FROM $cat.m.s$t GROUP BY grp")
+        .as[(String, Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+      try {
+        Seq("a", "b").foreach { t =>
+          spark.sql(
+            s"""CREATE TABLE $cat.m.s$t (k BIGINT, grp STRING, x BIGINT)
+               |PARTITIONED BY (bucket(4, k))
+               |TBLPROPERTIES ('versioned'='true')""".stripMargin)
+          rows(t, 1L to 16L).write.mode("append").insertInto(s"$cat.m.s$t")
+        }
+        both(t => MaterializedView.create(spark, s"$cat.m.mv$t",
+          s"$cat.m.s$t", Seq("k"), Seq("grp"),
+          Seq("x" -> "sum", "x" -> "min", "x" -> "max")))
+        Seq("a", "b").foreach(t => assert(mvNow(t) == recomputeNow(t), s"create mv$t"))
+        (1 to 4).foreach { round =>
+          Seq("a", "b").foreach { t =>
+            rows(t, (1L to 3L).map(_ + 16L * round)).write.mode("append")
+              .insertInto(s"$cat.m.s$t")
+            spark.sql(s"DELETE FROM $cat.m.s$t WHERE k = ${round * 2}")
+          }
+          both(t => MaterializedView.refresh(spark, s"$cat.m.mv$t"))
+          Seq("a", "b").foreach(t =>
+            assert(mvNow(t) == recomputeNow(t), s"round $round mv$t"))
+        }
+      } finally pool.shutdown()
+    }
+  }
+
+  test("a caller's temp views named like the MV staging views survive create and refresh unchanged") {
+    withLake("tv") { (cat, _) =>
+      mkSource(cat)
+      Seq(42L).toDF("answer").createOrReplaceTempView("__mv_deltas")
+      Seq(7L).toDF("answer").createOrReplaceTempView("__mv_full")
+      try {
+        MaterializedView.create(spark, s"$cat.m.agg", s"$cat.m.src",
+          Seq("k"), Seq("grp"), Seq("x" -> "sum", "x" -> "count", "x" -> "max"))
+        Seq((5L, "a", 3L), (6L, "d", 8L)).toDF("k", "grp", "x")
+          .write.mode("append").insertInto(s"$cat.m.src")
+        MaterializedView.refresh(spark, s"$cat.m.agg")
+        assert(mv(cat) == recompute(cat))
+        assert(spark.table("__mv_deltas").as[Long].collect().toSeq == Seq(42L))
+        assert(spark.table("__mv_full").as[Long].collect().toSeq == Seq(7L))
+        val staging = spark.catalog.listTables().collect()
+          .filter(t => t.isTemporary && t.name.startsWith("__mv_"))
+          .map(_.name).toSet
+        assert(staging == Set("__mv_deltas", "__mv_full"),
+          s"staging views must be dropped after use: $staging")
+      } finally {
+        spark.catalog.dropTempView("__mv_deltas")
+        spark.catalog.dropTempView("__mv_full")
+      }
     }
   }
 
